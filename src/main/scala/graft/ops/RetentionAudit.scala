@@ -171,6 +171,13 @@ object RetentionAudit {
         (col("n_nonpos") + col("n_bad")).as("n_surviving"))
   }
 
+  /** Deadline for the six erase-then-probe preludes together. They take
+    * seconds at sf0.1; an hour is far past any healthy run, so hitting
+    * it means a hung build, which fails naming its family.
+    */
+  val AuditPreludeDeadline: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(1, java.util.concurrent.TimeUnit.HOURS)
+
   def x_retentionAudit(spark: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
@@ -300,12 +307,28 @@ object RetentionAudit {
         "doc_id", req)
     }) }
 
-    // await in the original fixed order; shut the pool down either way
+    // await in the original fixed order under one shared deadline; a
+    // family that fails or overruns it interrupts the others (no build
+    // keeps writing its clone while the error unwinds) and fails the
+    // audit naming that family. The pool shuts down either way
+    val deadline = AuditPreludeDeadline.fromNow
     val parts =
       try {
-        import scala.concurrent.duration.Duration
-        Seq(ndPartsF, annPartF, semPartsF, lmPartF, bpePartF, corpPartF)
-          .map(Await.result(_, Duration.Inf)).flatten
+        Seq("neardup" -> ndPartsF, "ann" -> annPartF, "semantic" -> semPartsF,
+            "lm" -> lmPartF, "bpe" -> bpePartF, "corpus" -> corpPartF)
+          .flatMap { case (family, f) =>
+            try Await.result(f, deadline.timeLeft)
+            catch {
+              case e: java.util.concurrent.TimeoutException =>
+                pool.shutdownNow()
+                throw new IllegalStateException(s"x_retention_audit: the $family " +
+                  s"erase-then-probe prelude did not finish within $AuditPreludeDeadline", e)
+              case scala.util.control.NonFatal(e) =>
+                pool.shutdownNow()
+                throw new IllegalStateException(
+                  s"x_retention_audit: the $family erase-then-probe prelude failed", e)
+            }
+          }
       } finally pool.shutdown()
     parts.reduce(_ unionByName _)
       .orderBy(col("artifact"))

@@ -309,27 +309,26 @@ object TextOps {
     jaccardOf(pairs)
   }
 
-  /** Strategy valve on c15's label-propagation sweeps. Min-label
-    * propagation converges in component-diameter sweeps; near-dup
-    * components are clique-ish (fixture max diameter 3), so the cap is
-    * never the terminator on real dedup graphs — it detects a
-    * pathological chain-shaped graph, at which point [[clustersOf]]
-    * switches to the O(log n)-round alternating-star algorithm
-    * ([[starLabels]]) on the same checkpointed edges instead of
+  /** Strategy valve on c15's label-propagation rounds. Labels start
+    * from partition-local component minima, so rounds only carry labels
+    * ACROSS partitions (none at all when the edge list fits in one
+    * partition, as every fixture and sf0.1 graph does); the cap is never
+    * the terminator on real dedup graphs — it detects a pathological
+    * graph whose cross-partition diameter defeats the ladder, at which
+    * point [[clustersOf]] switches to the O(log n)-round alternating-star
+    * algorithm ([[starLabels]]) on the same edge blocks instead of
     * sweeping O(diameter) more times.
     */
   val MaxCcIters = 20
 
   /** Plain one-hop sweeps before [[clustersOf]] escalates to
     * hop²+jump rounds. A plain sweep is ~2.5× cheaper than a
-    * pointer-jumping round (one label-edge join + one checkpoint vs
-    * two hops, a label self-join, and the same checkpoint), and
-    * clique-ish dedup graphs converge within a few sweeps — the
-    * round-16 A/B (BENCH_NOTES (bj)): the c2 pair graph converges in
-    * 2 plain sweeps, so pure hop+jump paid double-round cost for
-    * nothing, while the 17-sweep c7 graph still finishes in 4 + 5
-    * escalated rounds. Four covers every clique-ish fixture graph
-    * with one sweep of convergence-check slack.
+    * pointer-jumping round (one label-edge join vs two hops plus a
+    * label self-join), and once labels are seeded with partition-local
+    * component minima the remaining propagation is cross-partition
+    * only — typically a sweep or two plus the confirming one. The
+    * escalated rounds are the tail for a graph whose components chain
+    * through many partitions.
     */
   val PlainCcSweeps = 4
 
@@ -337,23 +336,24 @@ object TextOps {
     * that an actual dedup pipeline needs: connected components over
     * c2's verified pairs, labeling every member with the component's
     * min doc_id (`cluster_id`) and flagging the canonical keeper.
-    * Iterative min-label propagation on an escalation ladder: plain
-    * one-hop sweeps first (cheapest per round — dedup graphs are
-    * clique-ish and converge in a few), then, past [[PlainCcSweeps]],
-    * pointer-jumping rounds that take the per-node min over the 2-hop
-    * neighborhood's labels and shortcut lab ← lab(lab), doubling the
-    * covered depth per round — O(log diameter) rounds for the
-    * high-diameter tail instead of O(diameter) sweeps (the sf0.1
-    * semantic pair graph: 17 plain sweeps, 4+5 ladder rounds).
+    * Labels are seeded by a union-find over each edge partition
+    * (exact when the edges fit in one partition — then no propagation
+    * round runs at all), then min-label propagation carries them
+    * across partitions on an escalation ladder: plain one-hop sweeps
+    * first, then, past [[PlainCcSweeps]], pointer-jumping rounds that
+    * take the per-node min over the 2-hop neighborhood's labels and
+    * shortcut lab ← lab(lab), doubling the covered depth per round —
+    * O(log diameter) rounds for a high-diameter tail instead of
+    * O(diameter) sweeps. The final round only confirms the labels.
     * Deterministic (min is order-free, and every operator only lowers
     * labels).
     *
-    * Scale (100 TB): per round, two label-edge equi-joins with
+    * Scale (100 TB): the seed is one pass over each ~2M-edge partition
+    * on primitive arrays; per round, two label-edge equi-joins with
     * partial-agg'd mins + one label self-join — label state is
-    * 16 bytes/node, never the documents, and total shuffle volume to
-    * converge matches the one-hop form (propagation work is
-    * conserved); what the round structure buys a CLUSTER is the
-    * barrier count — log-d synchronization points instead of d. The
+    * 16 bytes/node, never the documents. The seed removes the
+    * intra-partition share of the propagation, so rounds (the CLUSTER's
+    * synchronization barriers) track the cross-partition diameter. The
     * loop runs on co-partitioned RDDs: the pair lineage executes once
     * and the bidirectional edge list is hash-partitioned and persisted
     * up front, each round persists its label generation and unpersists
@@ -376,9 +376,21 @@ object TextOps {
     * exactly as it could never join or propagate in a frame-level
     * formulation either.
     *
-    * Storage: superseded per-round label generations are unpersisted
-    * as soon as the next generation's blocks are live, and the edge
-    * blocks are unpersisted once the loop finishes; only the FINAL
+    * Jobs: one count executes the pair lineage (it sizes the
+    * partitioning), and the next job materializes edges, seed labels
+    * and — with more than one partition — the first round; every
+    * further round is one job, and the last one finds nothing changed.
+    *
+    * Storage: the persisted pair list is dropped right after that
+    * second job. Superseded per-round label generations are unpersisted
+    * as soon as the next generation's blocks are live, except the
+    * latest localCheckpointed one, which later generations' lineage
+    * ends at — it is kept until the loop exits, so block loss inside
+    * the loop recomputes at most the rounds since that truncation;
+    * after it, a lost block of the final generation is not
+    * recomputable past the truncation point (the read fails loud,
+    * never with a wrong label). The edge blocks are unpersisted once
+    * the loop finishes; only the FINAL
     * label RDD stays persisted (the returned frame reads it lazily) —
     * it becomes unreferenced when the caller drops the result and is
     * reclaimed by the ContextCleaner on driver GC (the judged sessions
@@ -387,16 +399,19 @@ object TextOps {
     * explicit cleanup instead.
     */
   def clustersOf(pairList: DataFrame): DataFrame =
-    clustersOf(pairList, MaxCcIters)
+    clustersOf(pairList, MaxCcIters, None)
 
-  /** The round-budget-parameterized form: production callers use the
-    * [[MaxCcIters]] default above; tests pass a smaller budget to
-    * exercise the starLabels valve THROUGH this wiring (the escalated
-    * rounds cover depth ~2^budget past [[PlainCcSweeps]], so no
-    * realistic graph reaches the valve organically — by design, but
-    * the fallback branch still needs integration coverage).
+  /** The test form: production callers use the [[MaxCcIters]] default
+    * and the edge-count-sized partitioning above. Tests pass a smaller
+    * round budget to exercise the starLabels valve THROUGH this wiring
+    * (no realistic graph reaches the valve organically — by design, but
+    * the fallback branch still needs integration coverage), and a fixed
+    * partition count (`parts`) so the propagation rounds that carry
+    * labels ACROSS partitions run on graphs far below the ~2M-edge
+    * sizing — the output must not depend on how the edges are split.
     */
-  private[graft] def clustersOf(pairList: DataFrame, maxIters: Int): DataFrame = {
+  private[graft] def clustersOf(pairList: DataFrame, maxIters: Int,
+      parts: Option[Int]): DataFrame = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
@@ -433,20 +448,17 @@ object TextOps {
         }
       }).persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = raw.count()
-    val part = new HashPartitioner(ccParts(spark, nEdges))
+    val part = new HashPartitioner(parts.getOrElse(ccParts(spark, nEdges)))
     // bidirectional edges keyed by the NEIGHBOR (the side whose label a
-    // hop reads), partitioned once; materialized BEFORE raw unpersists
-    // so the pair-generation lineage is never re-paid
+    // hop reads), partitioned once; the first job below materializes
+    // them while raw's blocks are still live, so the pair-generation
+    // lineage is never re-paid
     val edges = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
-    raw.unpersist(false)
-    // node universe with identity labels: reduceByKey over the already-
-    // partitioned edges is shuffle-free, and preservesPartitioning
-    // keeps the co-partitioning for every round below
-    var labels: RDD[(Long, Long)] = edges.mapValues(_ => 0L)
-      .reduceByKey(part, (a, _) => a)
-      .mapPartitions(_.map { case (id, _) => (id, id) },
-        preservesPartitioning = true)
+    // seed labels: each node's component minimum over its partition's
+    // edges. Shuffle-free, and co-partitioned with `edges` for every
+    // round below (each node is a key exactly where its edges live)
+    var labels: RDD[(Long, Long)] = edges
+      .mapPartitions(localComponentMins, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // one min-label propagation hop: each node takes the min of its own
     // label and its neighbors' labels — semantics identical to the old
@@ -458,8 +470,19 @@ object TextOps {
       ls.leftOuterJoin(nmin, part) // co-partitioned
         .mapValues { case (lab, m) => math.min(lab, m.getOrElse(lab)) }
     }
+    var done = nEdges == 0L
+    if (!done && part.numPartitions == 1) {
+      // one partition holds every edge, so the local union-find saw the
+      // whole graph: the seed IS the component-minimum labeling. One job
+      // materializes edges and labels; no propagation round runs
+      labels.count()
+      done = true
+    }
+    // the latest localCheckpointed generation: later generations'
+    // lineage ends at its blocks, so it stays persisted until a newer
+    // truncation point supersedes it or the loop exits
+    var anchor: Option[RDD[(Long, Long)]] = None
     var sweep = 0
-    var done = labels.isEmpty()
     while (!done && sweep < maxIters) {
       val start = labels
       val stepped =
@@ -467,37 +490,44 @@ object TextOps {
         else
           // escalated round: two hops, then the pointer-jumping
           // shortcut lab ← startLab(lab). Labels are always node ids
-          // with lab(x) ≤ x (init lab = id; hop takes min with the own
-          // label), so the dereference join is total and the update
-          // monotone non-increasing; the composition roughly DOUBLES
-          // the covered pointer depth per round. A fixpoint of the
-          // composed operator is a hop-fixpoint (every operator only
-          // lowers labels), i.e. exactly the component-minimum
-          // labeling.
+          // of the same component with lab(x) ≤ x (the seed is a local
+          // component minimum; hop takes min with the own label), so
+          // the dereference join is total and the update monotone
+          // non-increasing; the composition roughly DOUBLES the covered
+          // pointer depth per round. A fixpoint of the composed
+          // operator is a hop-fixpoint (every operator only lowers
+          // labels), i.e. exactly the component-minimum labeling.
           hop(hop(start))
             .map { case (id, lab) => (lab, id) }
             .join(start, part)
             .map { case (_, (id, lab2)) => (id, lab2) }
             .partitionBy(part)
       val next = stepped.persist(StorageLevel.MEMORY_AND_DISK)
-      // lineage truncation every few rounds: `start` unpersists eagerly
-      // below, so without this a block lost LATE in the loop would
-      // recompute every prior round from `edges` — localCheckpoint
-      // composes with the persist and materializes inside the same
-      // convergence job (deterministic either way; this bounds the
-      // recompute cost, it does not affect results)
-      if (sweep % 8 == 7) next.localCheckpoint()
+      // lineage truncation every few rounds, so a block lost late in
+      // the loop recomputes at most 8 rounds from the anchor instead of
+      // every round from `edges` — localCheckpoint composes with the
+      // persist and materializes inside the same convergence job
+      // (deterministic either way; it bounds recompute cost, it does
+      // not affect results)
+      val truncate = sweep % 8 == 7
+      if (truncate) next.localCheckpoint()
       // convergence check against the round-START labels; the count
-      // fills `next`'s persisted blocks inside the same job, so a round
-      // is one scheduled job end to end (the old frame form paid a
-      // checkpoint job + an isEmpty job + per-exchange AQE stage-jobs)
+      // fills `next`'s persisted blocks inside the same job (the first
+      // round's job also fills the edge and seed blocks), so a round is
+      // one scheduled job end to end
       done = next.join(start, part)
         .filter { case (_, (nl, ol)) => nl != ol }
         .count() == 0L
-      start.unpersist(false)
+      if (sweep == 0) raw.unpersist(false)
+      if (!anchor.contains(start)) start.unpersist(false)
+      if (truncate) { anchor.foreach(_.unpersist(false)); anchor = Some(next) }
       labels = next
       sweep += 1
     }
+    // past the loop only the final generation is read; a lost block of
+    // it beyond the anchor's truncation point is not recomputable in
+    // local mode (see the storage note in the scaladoc)
+    anchor.filterNot(_ eq labels).foreach(_.unpersist(false))
     val labelsDf =
       if (done)
         spark.createDataFrame(
@@ -507,9 +537,9 @@ object TextOps {
         // the optimistic path hit the valve: component diameter exceeds
         // MaxCcIters, so per-sweep propagation would need O(diameter)
         // more rounds. Switch to the O(log n)-round alternating-star
-        // algorithm over the SAME materialized edge blocks — the
-        // expensive pair-generation lineage is not re-paid, and the
-        // caller gets correct labels instead of an abort.
+        // algorithm over the SAME edge blocks — the expensive
+        // pair-generation lineage is not re-paid, and the caller gets
+        // correct labels instead of an abort.
         val star = starLabels(spark.createDataFrame(
           edges.map { case (nbr, tgt) => Row(tgt, nbr) },
           StructType(Seq(StructField("a_id", LongType), StructField("b_id", LongType))))
@@ -519,12 +549,58 @@ object TextOps {
         labels.unpersist(false)
         star
       }
-    // the loop is over (the fallback's edge handoff localCheckpoints
-    // eagerly above): nothing reads the edge blocks again. The final
-    // label RDD alone stays persisted — the returned frame consumes it
-    // lazily; see the storage note in the scaladoc.
+    // every branch has materialized what it reads (the fallback's edge
+    // handoff localCheckpoints eagerly above): nothing reads the pair or
+    // edge blocks again. The final label RDD alone stays persisted — the
+    // returned frame consumes it lazily; see the storage note in the
+    // scaladoc.
+    raw.unpersist(false)
     edges.unpersist(false)
     finishClusters(labelsDf)
+  }
+
+  /** Seed labels for one partition of the CC edge list: a union-find
+    * over the partition's (nbr, tgt) edges, emitting (key, min id of the
+    * key's LOCAL component) once per distinct key. Every seed is a node
+    * id of the key's true component with seed ≤ key, so min-label
+    * propagation from it converges to the same exact component minima
+    * as from the identity, in no more rounds. All state is primitive
+    * arrays over the partition's sorted distinct ids (parents as Int
+    * indices, union toward the smaller index = smaller id, find with
+    * path halving), bounded by [[ccParts]]'s ~2M-edge partitions.
+    */
+  private def localComponentMins(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val keys = new scala.collection.mutable.ArrayBuilder.ofLong
+    val tgts = new scala.collection.mutable.ArrayBuilder.ofLong
+    it.foreach { case (k, t) => keys += k; tgts += t }
+    val ks = keys.result(); val ts = tgts.result()
+    val ids = new Array[Long](ks.length + ts.length)
+    System.arraycopy(ks, 0, ids, 0, ks.length)
+    System.arraycopy(ts, 0, ids, ks.length, ts.length)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    var i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, v)
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    val isKey = new Array[Boolean](n)
+    i = 0
+    while (i < ks.length) {
+      val a = idx(ks(i))
+      isKey(a) = true
+      val ra = find(a); val rb = find(idx(ts(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
+    }
+    Iterator.range(0, n).filter(isKey(_)).map(j => (ids(j), ids(find(j))))
   }
 
   /** Partition sizing for the CC loop's keyed state: label/edge rows

@@ -14,6 +14,9 @@ import scala.collection.mutable
   * Usage: runMain graft.tools.ProfileJobs <dir> <query> [query ...]
   */
 object ProfileJobs {
+  /** Listener-bus drain limit: generous, but finite. */
+  private val BusDrainTimeoutMs = 10L * 60 * 1000
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileJobs <dir> <query> [query...]")
     val d = args(0)
@@ -51,10 +54,17 @@ object ProfileJobs {
       // drain the listener bus properly (a fixed sleep can under-drain
       // and silently drop trailing job-end events); listenerBus is
       // private[spark], so go through reflection — a profiling tool is
-      // the one place that's acceptable
+      // the one place that's acceptable. The explicit-timeout overload:
+      // the no-arg one hides a 10 s limit that a slow bus trips
       val sc = spark.sparkContext
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      try bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, Long.box(BusDrainTimeoutMs))
+      catch {
+        case e: java.lang.reflect.InvocationTargetException =>
+          throw new IllegalStateException(s"$name: the listener bus did not " +
+            s"drain within ${BusDrainTimeoutMs / 1000} s", e.getCause)
+      }
       spark.sparkContext.removeSparkListener(listener)
       println(s"=== $name wall=${"%.3f".format(wall)}s jobs=${recs.size}")
       val ordered = recs.sortBy(_.t0).toSeq

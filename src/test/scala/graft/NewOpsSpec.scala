@@ -421,29 +421,83 @@ class NewOpsSpec extends SparkSpec {
     }
   }
 
+  /** A cluster frame's rows in [[ufClusters]]'s shape. */
+  private def labeled(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Boolean)] =
+    df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
+      r.getAs[Boolean]("is_canonical"))).toSet
+
   test("clustersOf converges on a high-diameter chain — correct labels, no partial propagation") {
-    // a 25-link chain needed the alternating-star fallback when sweeps
-    // propagated one hop each; the round-15 hop+hop+jump rounds cover
-    // depth exponentially (d → 2(d+2)), so the chain now converges on
-    // the optimistic path in ~4 rounds. The star fallback stays as the
-    // valve tripwire and is exercised directly by the
+    // labels are seeded with each edge partition's union-find minima, so
+    // at one partition (every fixture-sized graph) the seed is already
+    // final and no propagation round runs. At 3 and 8 partitions the
+    // 25-link chain is cut into short local runs (node i hashes to
+    // partition i mod p), so the plain sweeps and the hop+hop+jump
+    // rounds carry labels across partitions. The star fallback stays
+    // as the valve tripwire, exercised directly by the
     // clustersOfBigStar tests below.
-    val chain = (0L until 25L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val rows = TextOps.clustersOf(chain).collect()
-    assert(rows.length === 26 && rows.forall(_.getAs[Long]("cluster_id") == 0L))
-    assert(rows.count(_.getAs[Boolean]("is_canonical")) === 1)
-    // a clique of the same size converges in one sweep (diameter 1)
-    val clique = (for (i <- 0L until 8L; j <- (i + 1) until 8L) yield (i, j))
-      .toDF("a_id", "b_id")
-    val cr = TextOps.clustersOf(clique).collect()
-    assert(cr.length === 8 && cr.forall(_.getAs[Long]("cluster_id") == 0L))
+    val chainPairs = (0L until 25L).map(i => (i, i + 1))
+    val chain = chainPairs.toDF("a_id", "b_id")
+    // a clique of the same size: diameter 1
+    val cliquePairs = for (i <- 0L until 8L; j <- (i + 1) until 8L) yield (i, j)
+    val clique = cliquePairs.toDF("a_id", "b_id")
+    for (p <- Seq(1, 3, 8)) {
+      assert(labeled(TextOps.clustersOf(chain, TextOps.MaxCcIters, Some(p))) ===
+        ufClusters(chainPairs.toArray), s"chain at $p partitions")
+      assert(labeled(TextOps.clustersOf(clique, TextOps.MaxCcIters, Some(p))) ===
+        ufClusters(cliquePairs.toArray), s"clique at $p partitions")
+    }
     // the starLabels VALVE through clustersOf's own wiring: a zero
-    // round budget forces the fallback branch immediately (no real
-    // graph reaches it organically under hop+hop+jump) — labels must
-    // still be the exact component minima
-    val fb = TextOps.clustersOf(chain, maxIters = 0).collect()
+    // round budget at more than one partition forces the fallback
+    // branch immediately (no real graph reaches it organically) —
+    // labels must still be the exact component minima
+    val fb = TextOps.clustersOf(chain, maxIters = 0, parts = Some(3)).collect()
     assert(fb.length === 26 && fb.forall(_.getAs[Long]("cluster_id") == 0L))
     assert(fb.count(_.getAs[Boolean]("is_canonical")) === 1)
+  }
+
+  /** Jobs `body` schedules on this thread, counted by a listener over a
+    * private job group; the listener bus is drained (bounded) before
+    * the count is read.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      try body finally sc.clearJobGroup()
+      // listenerBus is private[spark]: reach its explicit-timeout drain
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
+    } finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  test("clustersOf job count: a chain plus cliques resolves in ≤ 6 jobs, result collect included") {
+    // one 9-node chain plus 30 cliques of 3–6 nodes — fits one CC
+    // partition, so the seed is final: a count for the pair lineage, one
+    // job materializing edges and seed labels, and the result's jobs.
+    // Each propagation round would add one job (identity-seeded labels
+    // took 11+ here); this bound keeps the round count from creeping back
+    val chain = (0L until 8L).map(i => (i, i + 1))
+    var next = 100L
+    val cliques = (0 until 30).flatMap { c =>
+      val ids = next until next + 3 + c % 4
+      next += 10
+      for (a <- ids; b <- ids if a < b) yield (a, b)
+    }
+    val pairs = chain ++ cliques
+    var got = Set.empty[(Long, Long, Boolean)]
+    val jobs = jobsOf { got = labeled(TextOps.clustersOf(pairs.toDF("a_id", "b_id"))) }
+    assert(got === ufClusters(pairs.toArray))
+    assert(jobs <= 6, s"clustersOf scheduled $jobs jobs")
   }
 
   test("clustersOfBigStar equals union-find on fixture pairs, chains, and stars") {

@@ -301,18 +301,23 @@ class PropertySpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expected = parent.keys.map(x => (x, find(x), x == find(x))).toSet
-      val got = graft.ops.TextOps.clustersOf(edges.toDF("a_id", "b_id")).collect()
+      def labeled(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
           r.getAs[Boolean]("is_canonical"))).toSet
+      val got = labeled(graft.ops.TextOps.clustersOf(edges.toDF("a_id", "b_id")))
       assert(got === expected, s"edges: $edges")
+      // split invariance: the partition-local seed plus cross-partition
+      // rounds give the same labels however the edges are partitioned
+      for (p <- Seq(1, 3, 8)) {
+        val split = labeled(graft.ops.TextOps.clustersOf(edges.toDF("a_id", "b_id"),
+          graft.ops.TextOps.MaxCcIters, Some(p)))
+        assert(split === expected, s"$p partitions, edges: $edges")
+      }
       // the O(log n) alternating-star path resolves the same graphs to
       // the same labels — both algorithms are exact, so they must agree
       // on every generated shape, not just the chain that forces the
       // strategy switch
-      val star = graft.ops.TextOps.clustersOfBigStar(edges.toDF("a_id", "b_id"))
-        .collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
-          r.getAs[Boolean]("is_canonical"))).toSet
+      val star = labeled(graft.ops.TextOps.clustersOfBigStar(edges.toDF("a_id", "b_id")))
       assert(star === expected, s"big-star diverged, edges: $edges")
     }
   }
